@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, StringTrim, Upper}
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, ExpressionInfo, Literal, StringTrim, Upper}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VocabTermCounts, VocabTermCountsDyn}
 
@@ -74,7 +75,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
               if (u == null) null else u.toString
             }
           VocabTermCounts(children.head, vocab)
-        } else VocabTermCountsDyn(children.head, children(1))
+        } else {
+          // a NULL vocabulary column counts nothing, as a NULL literal does
+          val empty = Literal.create(Seq.empty[String], ArrayType(StringType))
+          VocabTermCountsDyn(children.head, Coalesce(Seq(children(1), empty)))
+        }
       }))
     ext.injectFunction((
       FunctionIdentifier("ngram_hash64"),

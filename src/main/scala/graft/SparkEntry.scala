@@ -90,11 +90,16 @@ object SparkEntry {
     * width 5 won or tied every query; the old cores-pinned 32 lost
     * up to 30%). Env-overridable for A/B sweeps (measurement
     * tooling, not a tuning surface: production scans never take
-    * this path).
+    * this path). A set override is stamped on stderr, as
+    * `SPARK_GRAFT_CONF` overrides are, so a leftover variable shows
+    * in every log it changes.
     */
   private[graft] val SpreadChunkBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_CHUNK").flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(131072L)
+    sys.env.get("SPARK_GRAFT_SPREAD_CHUNK").fold(131072L) { s =>
+      val v = s.trim.toLongOption.filter(_ > 0).getOrElse(131072L)
+      System.err.println(s"[graft] SPARK_GRAFT_SPREAD_CHUNK override: '$s' -> $v")
+      v
+    }
 
   /** Round-robin fan-out of a small scan per [[scanFanout]] — identity
     * when the table already scans wide (the 100 TB case).
@@ -105,13 +110,6 @@ object SparkEntry {
     if (n > 0) df.repartition(n) else df
   }
 
-  /** Engine-portable half-up rounding on non-negative doubles:
-    * `floor(x*10^dp + 0.5)/10^dp`. Unlike `round()`, both engines
-    * apply identical IEEE ops to the identical binary double, so a
-    * value like 4.475 (stored 4.47499…) rounds the same way in Spark
-    * and DuckDB. Used wherever the operand is an exact ratio of
-    * integers (means/rates), where x.xx5 boundaries actually occur.
-    */
   /** Re-crawl a deterministic 10% of docs under shifted ids: the
     * 500-doc gate corpora have no naturally planted duplicates
     * (generator rate is 1/625), so dedup gates would verify a no-op.

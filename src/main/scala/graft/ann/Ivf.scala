@@ -70,6 +70,11 @@ object Ivf {
     * with Spark's own struct ordering, so ties and NaN resolve exactly
     * as the old max(struct(...)) aggregate did (ties → smaller
     * cluster_id; assignment expects non-null, equal-width embeddings).
+    * The fold starts from a NULL `neg_cid`, which every candidate
+    * beats, so an empty centroid set assigns a NULL `cluster_id` to
+    * every row rather than an overflowed id. Each `emb` row is
+    * assigned on its own: `emb` must be unique by `vec_id`, or the
+    * duplicates come out as duplicate rows.
     */
   private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame = {
     val centsRow = cents.agg(
@@ -78,7 +83,7 @@ object Ivf {
       .select(col("vec_id"),
         aggregate(col("__cents"),
           struct(lit(Double.NegativeInfinity).as("sim"),
-            lit(Int.MinValue).as("neg_cid")),
+            lit(null).cast("int").as("neg_cid")),
           (acc, x) => {
             val cand = struct(
               VectorFunctions.cosine(col("emb"), x.getField("centroid")).as("sim"),
@@ -90,8 +95,10 @@ object Ivf {
         col("emb"))
   }
 
-  /** Corpus index: (vec_id, cluster_id, embedding). At scale, write
-    * this partitioned by cluster_id once and reuse.
+  /** Corpus index: (vec_id, cluster_id, embedding), one row per
+    * corpus row (`vec_id` must be unique); `cluster_id` is NULL when
+    * `cents` is empty. At scale, write this partitioned by cluster_id
+    * once and reuse.
     */
   def index(corpus: DataFrame, cents: DataFrame): DataFrame =
     assignTo(corpus.select(col("vec_id"), col("embedding").as("emb")), cents)

@@ -69,6 +69,18 @@ class DedupSpec extends SparkSpec {
     assert(recall > 0.2, s"recall=$recall")
   }
 
+  test("Ivf index: an empty centroid set gives every row a NULL cluster_id") {
+    val emb = Tables.embeddings(spark, sf())
+    val none = Seq.empty[(Int, Seq[Double])].toDF("cluster_id", "centroid")
+    val ids = graft.ann.Ivf.index(emb, none).select("cluster_id").as[Option[Int]].collect()
+    assert(ids.length.toLong === emb.count())
+    assert(ids.forall(_.isEmpty), ids.flatten.distinct.take(3).mkString(", "))
+    // one centroid: every row lands in it
+    val one = emb.limit(1).select(lit(7).as("cluster_id"), col("embedding").as("centroid"))
+    assert(graft.ann.Ivf.index(emb, one).select("cluster_id").as[Option[Int]]
+      .collect().toSet === Set(Some(7)))
+  }
+
   test("lshTopK recall against brute force is reasonable") {
     val emb = Tables.embeddings(spark, sf()).cache()
     val q = emb.filter(col("vec_id") < 8)

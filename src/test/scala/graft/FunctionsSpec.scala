@@ -326,6 +326,23 @@ class FunctionsSpec extends SparkSpec {
         col("__vocab")))).count() === 0)
   }
 
+  test("vocab_term_counts: a NULL vocabulary counts nothing in both forms") {
+    val docs = Seq((1L, Seq("a", "b")), (2L, null)).toDF("doc_id", "toks")
+      .withColumn("voc", lit(null).cast("array<string>"))
+    val literal = call_function("vocab_term_counts", col("toks"),
+      lit(null).cast("array<string>"))
+    val column = call_function("vocab_term_counts", col("toks"), col("voc"))
+    // a projection over a local frame is evaluated interpreted; after
+    // an exchange, by generated code
+    for (df <- Seq(docs, docs.repartition(1)); (form, e) <- Seq("literal" -> literal,
+        "column" -> column)) {
+      val got = df.select(col("doc_id"), when(e.isNull, -1).otherwise(size(e)).as("n"))
+        .orderBy("doc_id").select("n").as[Int].collect().toSeq
+      // a NULL vocabulary is empty; NULL tokens stay NULL (-1)
+      assert(got === Seq(0, -1), form)
+    }
+  }
+
   test("unicodeClean: spaces mapped, zero-width and controls deleted, NFC first") {
     val df = Seq(
       "a\u00A0b",              // NBSP -> plain space
